@@ -18,4 +18,9 @@ Spark-first:
 
 __version__ = "0.1.0"
 
+from ophidia_io_server_spark import _zipimport
 from ophidia_io_server_spark.session import get_spark  # noqa: F401
+
+# Python workers import this package when they unpickle engine code; on
+# Python < 3.12 this stops them re-reading every zip archive on each task.
+_zipimport.install()

@@ -74,7 +74,10 @@ def serialize_result_set(df: DataFrame, max_packet_len: int = MAX_PACKET_LEN
         buf.append(rec)
         buf_len += len(rec)
         nrows += 1
-    yield flush()
+    if buf:
+        yield flush()
+    elif first:
+        yield header  # empty result: the header, then only the terminator
     yield struct.pack(">i", 0)  # terminator
 
 

@@ -21,6 +21,9 @@ Scale design: the explicit-index space is range-partitioned over ``nrows``;
 each Spark task turns its contiguous id range into a *minimal set of
 hyperslabs* (``flat_range_to_slabs``) and issues one backend read per slab —
 no driver-side data, no per-row reads, bulk sequential I/O per executor.
+The partition count follows the cells read (``import_partitions``), not the
+row count: a few thousand long rows are as much work as millions of short
+ones.
 
 Backends: ``netCDF4`` (gated import — files must be reachable from every
 executor), plus a deterministic synthetic backend (``synthetic://``) whose
@@ -288,6 +291,20 @@ _REDUCE_KERNELS = {
 }
 
 
+# Cells (doubles) one import task reads: 2 MiB.  A partition is a Python
+# task with a fixed cost of its own, so small imports stay in one task and
+# large ones spread over the cores.
+IMPORT_CELLS_PER_PARTITION = 1 << 18
+
+
+def import_partitions(cells: int, parallelism: int) -> int:
+    """Partitions for an import that reads ``cells`` doubles: one per
+    ``IMPORT_CELLS_PER_PARTITION`` started, at most ``parallelism``.  Sized
+    on cells read, so a ``sub_operation`` import that reduces each row to one
+    value is sized like the plain import of the same hyperslab."""
+    return max(1, min(parallelism, -(-cells // IMPORT_CELLS_PER_PARTITION)))
+
+
 def import_variable(
     spark: SparkSession,
     src_path: str,
@@ -314,6 +331,9 @@ def import_variable(
     framework carves one datacube into fragments by row ranges, each imported
     by a different server.  Ids stay GLOBAL (cube-absolute), so fragments
     re-join on id_dim.
+
+    ``partitions`` fixes the task count; by default it is
+    ``import_partitions`` of the cells read.  Rows are the same at any count.
     """
     backend = backend_for(src_path)
     file_dims = backend.dims(src_path, measure)
@@ -346,7 +366,8 @@ def import_variable(
     if not (0 <= lo < hi <= nrows):
         raise QueryExecError(f"import: bad row range [{lo + 1}, {hi}] of {nrows}")
     n_sel = hi - lo
-    nparts = partitions or min(spark.sparkContext.defaultParallelism, max(1, n_sel // 1024) or 1)
+    nparts = partitions or import_partitions(
+        n_sel * arr_len, spark.sparkContext.defaultParallelism)
 
     def read_partition(iterator):
         import pandas as pd  # noqa: PLC0415

@@ -13,9 +13,11 @@ from hypothesis import strategies as st
 
 from ophidia_io_server_spark.operators.engine import IOServer
 from ophidia_io_server_spark.sources.netcdf_import import (
+    IMPORT_CELLS_PER_PARTITION,
     SyntheticBackend,
     flat_range_to_slabs,
     import_variable,
+    import_variable_multifile,
 )
 
 
@@ -217,6 +219,51 @@ def import_variable_multifile_bad(spark):
         ["synthetic://f1?dims=t:2,x:3", "synthetic://f2?dims=t:4,x:3"],
         "m", dim_names=["t", "x"], dim_types=["0", "1"],
     )
+
+
+# -- partition sizing: cells read, not rows -----------------------------------
+
+CUBE = "synthetic://tas?dims=lat:40,lon:50,time:720"
+CUBE_KW = dict(dim_names=["lat", "lon", "time"], dim_types=["1", "1", "0"])
+
+
+def _rows_bytes(df):
+    return sorted((r.id_dim, np.asarray(r.measure, dtype=np.float64).tobytes())
+                  for r in df.collect())
+
+
+def test_import_partitions_follow_cells(spark):
+    cells = 40 * 50 * 720
+    want = min(spark.sparkContext.defaultParallelism,
+               math.ceil(cells / IMPORT_CELLS_PER_PARTITION))
+    assert want > 1
+    assert import_variable(spark, CUBE, "tas", **CUBE_KW).rdd.getNumPartitions() == want
+    # the reduce kernel emits one value per row but reads every cell
+    reduced = import_variable(spark, CUBE, "tas", **CUBE_KW, sub_operation="avg")
+    assert reduced.rdd.getNumPartitions() == want
+    tiny = import_variable(spark, "synthetic://t?dims=lat:4,time:6", "m",
+                           dim_names=["lat", "time"], dim_types=["1", "0"])
+    assert tiny.rdd.getNumPartitions() == 1
+
+
+@pytest.mark.parametrize("kernel", [{}, {"sub_operation": "std"}])
+def test_import_rows_identical_at_any_partition_count(spark, kernel):
+    sized = import_variable(spark, CUBE, "tas", **CUBE_KW, **kernel)
+    assert sized.rdd.getNumPartitions() > 1
+    one = import_variable(spark, CUBE, "tas", **CUBE_KW, **kernel, partitions=1)
+    assert _rows_bytes(sized) == _rows_bytes(one)
+
+
+def test_multifile_import_rows_identical_at_any_partition_count(spark):
+    paths = ["synthetic://y1?dims=time:300,lat:40,lon:50",
+             "synthetic://y2?dims=time:420,lat:40,lon:50"]
+    kw = dict(dim_names=["time", "lat", "lon"], dim_types=["1", "0", "0"])
+    sized = import_variable_multifile(spark, paths, "tas", **kw)
+    assert sized.rdd.getNumPartitions() > 2
+    one = import_variable_multifile(spark, paths, "tas", **kw, partitions=1)
+    got = _rows_bytes(sized)
+    assert [i for i, _ in got] == list(range(1, 721))
+    assert got == _rows_bytes(one)
 
 
 # -- NetCDF-4/HDF5 backend (r9 verdict #6) ----------------------------------

@@ -110,6 +110,24 @@ def test_server_runtime_error_still_clean_E(server, spark, tmp_path):
         cli.close()
 
 
+def test_server_empty_select_then_select_on_one_connection(server):
+    """An empty result ends with exactly one terminator: a second one would
+    be read as the start of the next reply on the same connection."""
+    host, port = server.address
+    cli = QueryClient(host, port)
+    try:
+        cli.execute("operation=random_import;frag_name=empty_then;nrows=6;array_len=2")
+        nfields, rows = cli.execute("operation=select;from=empty_then;field=id_dim;"
+                                    "select_alias=id_dim;where=id_dim>100")
+        assert (nfields, rows) == (1, [])
+        nfields, rows = cli.execute("operation=select;from=empty_then;field=id_dim;"
+                                    "select_alias=id_dim;order=id_dim")
+        assert nfields == 1
+        assert rows == [[i] for i in range(1, 7)]
+    finally:
+        cli.close()
+
+
 def test_server_streams_multi_packet_results(server, monkeypatch):
     """The fetch path streams packet-by-packet (bounded driver memory): with
     a tiny max_packet_len the handler sends many packets and the client
