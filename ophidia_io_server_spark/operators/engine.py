@@ -24,6 +24,7 @@ from ophidia_io_server_spark.operators.select import (
     QueryExecError,
     execute_select,
 )
+from ophidia_io_server_spark.protocol import ResultSet
 from ophidia_io_server_spark.sources.random_import import random_fragment
 
 FRAG_SCHEMA = StructType(
@@ -55,19 +56,28 @@ class IOServer:
 
     # ------------------------------------------------------------------
 
-    def execute(self, query: str, params: dict | None = None) -> DataFrame | None:
+    def execute(self, query: str, params: dict | None = None, *, result_set: bool = False
+                ) -> DataFrame | ResultSet | None:
         """Run one dialect statement; returns a DataFrame for statements that
-        produce a result set (select / procedures), else None."""
+        produce a result set (select / procedures), else None.  The frame is
+        Spark-ordered by the statement's ORDER; with ``result_set=True`` it
+        comes back unordered as a ``ResultSet`` carrying the order column,
+        for ``protocol.serialize_result_set`` to sort on the driver."""
         q = parse_query(query)
         op = q["operation"]
         handler = getattr(self, f"_op_{op}", None)
         if handler is None:
             raise QueryExecError(f"unknown operation {op!r}")
-        return handler(q, params or {})
+        out = handler(q, params or {})
+        if out is None:
+            return None
+        if isinstance(out, DataFrame):
+            out = ResultSet(out)
+        return out if result_set else out.ordered()
 
     # -- queries --------------------------------------------------------
 
-    def _op_select(self, q, params) -> DataFrame:
+    def _op_select(self, q, params) -> ResultSet:
         return execute_select(self.catalog, q, params, validate_dense=self.validate_dense)
 
     def _op_create_frag_select(self, q, params) -> None:
@@ -77,7 +87,7 @@ class IOServer:
             # reference: "Only tables with 2 columns can be created"
             # (oph_io_server_query_manager.h:80, engine.c:110-118)
             raise QueryExecError("create_frag_select requires exactly 2 output columns")
-        df = execute_select(self.catalog, q, params, validate_dense=self.validate_dense)
+        df = execute_select(self.catalog, q, params, validate_dense=self.validate_dense).ordered()
         seq = q.get("sequential_id")
         if seq is not None:
             df = sequential_ids(df, int(seq))
@@ -290,7 +300,7 @@ class IOServer:
 
     # -- stored procedures ---------------------------------------------
 
-    def _op_function(self, q, params) -> DataFrame | None:
+    def _op_function(self, q, params) -> DataFrame | ResultSet | None:
         fname = (q.get("function") or "").lower()
         args = q.get("arg") or []
         if isinstance(args, str):
@@ -299,7 +309,7 @@ class IOServer:
         if fname == "oph_subset":
             return self._proc_subset(args, params)
         if fname == "oph_export":
-            return self.catalog.df(args[0]).orderBy(F.col(ID_COL).asc())
+            return ResultSet(self.catalog.df(args[0]), ID_COL)
         if fname == "oph_export_nc":
             # oph_export_nc(frag, path[, sharded]) — write the fragment to a
             # classic NetCDF file (or one file per partition when sharded),

@@ -10,7 +10,10 @@ Reference quirks preserved intentionally:
 - LIMIT applies to the *filtered input* before grouping/projection
   (engine.c:311-320), not to the final result;
 - ORDER BY is applied after projection, single numeric column, ASC only
-  (blocks.c:747-817; non-ASC ignored with a warning upstream);
+  (blocks.c:747-817; non-ASC ignored with a warning upstream).  The select
+  returns the unordered frame with its order column (``ResultSet``): a wire
+  fetch sorts the collected rows on the driver, in-process callers ask Spark
+  through ``ResultSet.ordered()``;
 - with GROUP BY, non-aggregate projected expressions take the first row of
   each group (blocks.c:2438-2458);
 - multi-table FROM is the aligned equi-join on id_dim and WHERE is mandatory
@@ -24,6 +27,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, MapType, StructType
 
 from ophidia_io_server_spark.catalog import Catalog
 from ophidia_io_server_spark.dialect.expression import (
@@ -32,6 +36,7 @@ from ophidia_io_server_spark.dialect.expression import (
     expression_uses_aggregate,
 )
 from ophidia_io_server_spark.dialect.parser import parse_limit
+from ophidia_io_server_spark.protocol import ResultSet
 
 ID_COL = "id_dim"
 
@@ -211,7 +216,10 @@ def make_resolver(df: DataFrame):
 
 
 def execute_select(catalog: Catalog, q: dict, params: dict | None = None,
-                   validate_dense: bool = False) -> DataFrame:
+                   validate_dense: bool = False) -> ResultSet:
+    """The select's result frame, unordered, with its ORDER column: a wire
+    fetch sorts the collected rows on the driver (``protocol``), in-process
+    callers take ``.ordered()``."""
     clauses = SelectClauses.from_query(q)
     df, multi = build_from(catalog, clauses, validate_dense=validate_dense)
     ctx = ExprContext(resolver=make_resolver(df), params=params or {}, id_col=ID_COL)
@@ -283,5 +291,8 @@ def execute_select(catalog: Catalog, q: dict, params: dict | None = None,
             order_col = default_alias(order_col, 0)
         if order_col not in out.columns:
             raise QueryExecError(f"order column {clauses.order!r} not in projection")
-        out = out.orderBy(F.col(order_col).asc())
-    return out
+        if isinstance(out.schema[order_col].dataType, (ArrayType, MapType, StructType)):
+            raise QueryExecError(f"order column {order_col!r} is not a scalar "
+                                 "(reference orders by one numeric column)")
+        return ResultSet(out, order_col)
+    return ResultSet(out)

@@ -15,12 +15,16 @@ with a result set, the RS packet stream (terminated by its zero-row packet),
 for ok without result an empty RS stream, and for errors a 4-byte length +
 UTF-8 message.  ``QUIT`` closes the connection.
 
-Error contract: analysis errors and runtime errors that surface while
-producing the FIRST packet become clean ``E`` frames.  Because packets then
-stream one at a time (O(packet) driver memory), a Spark failure after ``K``
-has been sent cannot be reframed — the connection is closed mid-stream, and
-clients must treat a truncated RS stream as a query failure, exactly as with
-the reference's chunked send loop.
+Memory contract: a result set is fetched with one Spark job, as one Arrow
+table on the driver per request (``protocol.serialize_result_set``), bounded
+by Spark's own ``spark.driver.maxResultSize``; the RS packets are then framed
+from that table at ``MAX_PACKET_LEN`` bytes each.
+
+Error contract: the whole result is collected, and its ORDER applied, before
+the ``K`` status byte is sent, so every analysis, execution and encoding
+error becomes a clean ``E`` frame and the connection stays usable.  After
+``K`` only the socket itself can fail; the connection is then closed, and a
+client must treat a truncated RS stream as a query failure.
 
 This is a developer/parity façade: production deployments should front Spark
 with Spark Connect / Livy-style services instead of a hand-rolled socket
@@ -36,8 +40,16 @@ import threading
 
 from pyspark.sql import SparkSession
 
+from ophidia_io_server_spark import protocol
 from ophidia_io_server_spark.operators.engine import IOServer
-from ophidia_io_server_spark.protocol import serialize_result_set
+from ophidia_io_server_spark.protocol import TERMINATOR, serialize_result_set
+
+
+def _read_exact(f, n: int) -> bytes:
+    buf = f.read(n)
+    if len(buf) < n:
+        raise ConnectionError("peer closed")
+    return buf
 
 
 def _recv_exact(sock: socket.socket, n: int) -> bytes:
@@ -68,18 +80,11 @@ class _Handler(socketserver.BaseRequestHandler):
                 # (≙ the reference's MetaDB rwlock); Spark jobs themselves are
                 # thread-safe and run outside the lock via the returned plan
                 with lock:
-                    df = srv.execute(query, params=params)
-                # materialize only the FIRST packet before emitting the 'K'
-                # status byte: pulling it forces plan execution, so analysis
-                # and early runtime errors surface here and become a clean
-                # 'E' frame.  The rest streams one packet at a time off
-                # toLocalIterator — O(packet) driver memory, the reference's
-                # 4 MB chunking contract (MAX_PACKET_LEN,
-                # etc/oph_ioserver.conf:5) — never a full driver buffer.
-                if df is not None:
-                    pkt_iter = serialize_result_set(df)
-                else:
-                    pkt_iter = iter([struct.pack(">ii", 0, 0) + struct.pack(">i", 0)])
+                    rs = srv.execute(query, params=params, result_set=True)
+                # the first packet collects the whole result (one Spark job)
+                # before 'K' is sent: every execution error becomes an 'E'
+                pkt_iter = (serialize_result_set(rs) if rs is not None
+                            else iter([struct.pack(">ii", 0, 0) + TERMINATOR]))
                 first_pkt = next(pkt_iter)
             except Exception as e:  # noqa: BLE001 — wire boundary
                 msg = f"{type(e).__name__}: {e}".encode()[:65536]
@@ -90,12 +95,10 @@ class _Handler(socketserver.BaseRequestHandler):
                 for pkt in pkt_iter:
                     self.request.sendall(pkt)
             except Exception:  # noqa: BLE001
-                # a failure after 'K' cannot become an 'E' frame (the client
-                # is mid-RS-parse) — it is a connection-level error, exactly
-                # as in the reference's chunked send loop
+                # only the socket can fail here (the client went away); the
+                # client is mid-RS-parse, so this cannot become an 'E' frame
                 self.request.close()
                 return
-
 
     def _read_binds(self) -> dict[int, object]:
         """Typed ?N bind args following the query (≙ the reference EQ
@@ -166,36 +169,27 @@ class QueryClient:
                 raw = str(v).encode()
                 frames.append(b"S" + struct.pack(">i", len(raw)) + raw)
         self.sock.sendall(b"".join(frames))
-        status = _recv_exact(self.sock, 1)
-        if status == b"E":
-            (ln,) = struct.unpack(">i", _recv_exact(self.sock, 4))
-            raise RuntimeError(_recv_exact(self.sock, ln).decode())
-        # read RS stream: header, then packets until the zero-row terminator
-        header = _recv_exact(self.sock, 8)
-        (nfields, _) = struct.unpack(">ii", header)
-        raw = [header]
-        while True:
-            count_b = _recv_exact(self.sock, 4)
-            (nrows,) = struct.unpack(">i", count_b)
-            if nrows > 0:
-                # rows are length-framed cell by cell; easiest exact reader:
-                # pull cells one by one
-                parts = [count_b]
-                for _ in range(nrows):
-                    nc_b = _recv_exact(self.sock, 4)
-                    (ncells,) = struct.unpack(">i", nc_b)
-                    parts.append(nc_b)
-                    for _ in range(ncells):
-                        head = _recv_exact(self.sock, 5)
-                        (cl,) = struct.unpack(">i", head[1:])
-                        parts.append(head + _recv_exact(self.sock, cl))
-                raw.append(b"".join(parts))
-            else:
+        with self.sock.makefile("rb") as f:  # buffered: no recv per cell header
+            status = _read_exact(f, 1)
+            if status == b"E":
+                (ln,) = struct.unpack(">i", _read_exact(f, 4))
+                raise RuntimeError(_read_exact(f, ln).decode())
+            # RS stream: header, then packets until the zero-row terminator
+            raw = [_read_exact(f, 8)]
+            while True:
+                count_b = _read_exact(f, 4)
                 raw.append(count_b)
-                break
-        from ophidia_io_server_spark.protocol import deserialize_packets
-
-        return deserialize_packets([b"".join(raw)])
+                (nrows,) = struct.unpack(">i", count_b)
+                if nrows == 0:
+                    break
+                for _ in range(nrows):
+                    nc_b = _read_exact(f, 4)
+                    raw.append(nc_b)
+                    for _ in range(struct.unpack(">i", nc_b)[0]):
+                        head = _read_exact(f, 5)
+                        raw.append(head)
+                        raw.append(_read_exact(f, struct.unpack(">i", head[1:])[0]))
+        return protocol.deserialize_packets([b"".join(raw)])
 
     def close(self) -> None:
         try:

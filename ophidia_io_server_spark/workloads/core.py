@@ -581,7 +581,7 @@ def insert_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     # L/D/B cell tags and the zero-row terminator), decode it client-side
     # and compare against the DataFrame rows.  rs_roundtrip_ok feeds the
     # hash gate (oracle emits literal TRUE); any framing drift reddens the
-    # row.  Driver cost: 4 rows through toLocalIterator.
+    # row.  Driver cost: one Arrow collect of 4 rows (one Spark job).
     from ophidia_io_server_spark.protocol import deserialize_packets, serialize_result_set
 
     nfields, wire_rows = deserialize_packets(serialize_result_set(out, max_packet_len=64))
